@@ -162,14 +162,19 @@ def test_incremental_bands_is_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pq_search_lookup_table_broadcast(spark):
-    # ADC search must broadcast the tiny query lookup table into the
-    # corpus-code join — a shuffled join would move the whole code table
+def test_pq_search_is_kernel_topk(spark):
+    # ADC search is one mapInPandas pass with the tiny query lookup table
+    # closed over: no join touches the corpus codes, the only exchange is
+    # the per-query top-k shuffle, and that top-k is distributed
+    # (per-partition WindowGroupLimit heaps)
     from usw_big_data_analysis_spark.queries.similarity import embed_pq_search
 
     plan = _plan(embed_pq_search(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
+    assert "MapInPandas" in plan
+    assert "Join" not in plan
     assert "CartesianProduct" not in plan
+    assert plan.count("Exchange") <= 1
+    assert "WindowGroupLimit" in plan
 
 
 def test_priority_sample_is_take_ordered(spark):

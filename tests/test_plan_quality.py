@@ -183,7 +183,9 @@ def test_bm25_scores_only_query_term_postings(spark, sf_dir):
     assert a.sort_merge_joins == 0
 
 
-def test_no_unpartitioned_window_in_any_registered_plan(spark, sf_dir):
+def test_no_unpartitioned_window_in_any_registered_plan(
+    spark, sf_dir, monkeypatch
+):
     """Suite-wide invariant (VERDICT r3 #4, closed in r4): ZERO WindowExec
     nodes with an empty partition spec across every registered query's
     final plan. Catalyst constant-folds foldable partition keys out of the
@@ -194,13 +196,28 @@ def test_no_unpartitioned_window_in_any_registered_plan(spark, sf_dir):
     queries do during construction. ~2 min; this is the repo's central
     scale invariant and worth the wall time."""
     from usw_big_data_analysis_spark.plans.inspect import (
+        lambda_split_count,
         perrow_round_count,
         unpartitioned_window_count,
     )
 
+    # a localCheckpoint'ed frame shows up as a LogicalRDD leaf in the final
+    # plan; count its lambdas as the builder checkpoints it
+    hidden = []
+    frame_cls = type(spark.range(0))  # the concrete (classic) DataFrame
+    checkpoint = frame_cls.localCheckpoint
+
+    def counted_checkpoint(self, *args, **kwargs):
+        hidden.append(lambda_split_count(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counted_checkpoint)
+
     offenders = {}
     rounders = {}
+    splitters = {}
     for name, fn in sorted(_QUERIES.items()):
+        hidden.clear()
         df = fn(spark, sf_dir)
         n = unpartitioned_window_count(df)
         if n:
@@ -208,12 +225,47 @@ def test_no_unpartitioned_window_in_any_registered_plan(spark, sf_dir):
         r = perrow_round_count(explain_formatted(df))
         if r:
             rounders[name] = r
+        k = lambda_split_count(df) + sum(hidden)
+        if k:
+            splitters[name] = k
     assert offenders == {}
     # Sibling invariant (same pass): no per-row BigDecimal round between a
     # scan and its first aggregate — the one accepted flag rounds a
     # DECIMAL-typed norm where exact decimal arithmetic is deliberate
     # (see plans/inspect.perrow_round_count).
     assert set(rounders) <= {"embed_jl_projection_audit"}, rounders
+    # Sibling invariant: no lambda body splits a document. Catalyst does
+    # not hoist the split out of the lambda, so it would re-run once per
+    # element (O(tokens^2) per row); see functions/text.ngrams.
+    assert splitters == {}, splitters
+
+
+def test_ngrams_reads_the_token_column(spark):
+    from pyspark.sql import functions as F
+
+    from usw_big_data_analysis_spark.functions.text import ngrams
+    from usw_big_data_analysis_spark.plans.inspect import lambda_split_count
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b")], "doc_id bigint, text string"
+    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
+    grams = toks.select("doc_id", ngrams("toks", 3).alias("g"))
+    assert lambda_split_count(grams) == 0
+    assert [r.g for r in grams.orderBy("doc_id").collect()] == [
+        ["a b c", "b c d"],
+        [],
+    ]
+    capped = toks.filter("doc_id = 1").select(ngrams("toks", 2, 2).alias("g"))
+    assert capped.first().g == ["a b", "b c"]
+    # the shape the helper replaces: the split inlined into the lambda
+    resplit = docs.select(
+        F.transform(
+            F.sequence(F.lit(1), F.size(F.split("text", " "))),
+            lambda i: F.element_at(F.split("text", " "), i),
+        ).alias("g")
+    )
+    assert lambda_split_count(resplit) == 1
 
 
 def test_observe_metrics_node_and_values(spark, sf_dir):

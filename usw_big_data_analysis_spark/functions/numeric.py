@@ -228,24 +228,6 @@ def isum_aggs(expr: Column, name: str) -> list[Column]:
     ]
 
 
-def isum_aggs_weighted(expr: Column, weight: Column, name: str) -> list[Column]:
-    """hi/lo split sums of ``expr * weight`` where ``weight`` is a bigint
-    count — the rollup form used when aggregating a pre-counted
-    (value, cnt) table instead of raw rows. The split happens BEFORE the
-    multiply (hi = floor(expr/1e9)·w, lo = (expr%1e9)·w), so the per-row
-    product stays below 2^53 even when expr·weight itself would overflow:
-    hi·1e9·Σ + lo·Σ reconstructs Σ(expr·w) exactly via isum_value.
-    Bounds: expr < 2^53 (exact double division), lo-term ≤ 1e9·w with
-    Σ(lo) bounded by 1e9 × total raw rows — the same ~1e9-row envelope as
-    isum_aggs."""
-    return [
-        F.sum(F.floor(expr / F.lit(_ISPLIT)).cast("bigint") * weight).alias(
-            f"{name}__hi"
-        ),
-        F.sum((expr % _ISPLIT) * weight).alias(f"{name}__lo"),
-    ]
-
-
 def isum_value(name: str, scale: int) -> Column:
     """Recombine hi/lo into the exact sum, scaled back: one deterministic
     double conversion + one division."""

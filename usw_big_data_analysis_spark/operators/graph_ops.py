@@ -139,7 +139,6 @@ def _pj_round(labels: DataFrame) -> DataFrame:
 # and lets the counting kernel sort raw keys with no dense remap (r08).
 _PK_SHIFT = 31
 _PK_LIM = 1 << _PK_SHIFT
-_PK_MASK = _PK_LIM - 1
 
 
 def wedge_pair_counts(

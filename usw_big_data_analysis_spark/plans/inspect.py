@@ -71,6 +71,37 @@ def unpartitioned_window_count(df: DataFrame) -> int:
     return n
 
 
+_LAMBDA = "lambdafunction("
+_SPLIT_CALL = re.compile(r"(?<![a-z_])split\(")
+
+
+def lambda_split_count(df: DataFrame) -> int:
+    """Number of ``lambdafunction(...)`` bodies in the optimized logical
+    plan that call ``split(``.
+
+    Higher-order functions are interpreted, not code-generated, and
+    Catalyst does not hoist lambda-invariant subexpressions out of a
+    lambda body: ``transform(seq, i -> element_at(split(text, ' '), i))``
+    splits the whole document once per element, O(tokens^2) per row.
+    Token arrays belong in a projected column the lambda reads (see
+    ``functions/text.ngrams``); the suite invariant is zero. Counts are per
+    occurrence in the plan text, so an unaliased column's generated name
+    counts again. Builders that ``localCheckpoint`` hide their lambdas
+    from this check."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    n = 0
+    start = text.find(_LAMBDA)
+    while start >= 0:
+        depth, i = 1, start + len(_LAMBDA)
+        while depth and i < len(text):
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        if _SPLIT_CALL.search(text, start, i):
+            n += 1
+        start = text.find(_LAMBDA, start + 1)
+    return n
+
+
 _AGG_NODE = re.compile(r"(?:HashAggregate|ObjectHashAggregate|SortAggregate)")
 _ROUND_CALL = re.compile(r"(?<![a-z_])round\(")
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import numeric as N
+from ..functions import text as T
 from ..registry import query
 from ..sources import load_table
 
@@ -85,24 +86,11 @@ def decontam_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.split("text", " ").alias("w")
     )
-    # Docs shorter than _NGRAM words produce no grams: the sequence must be
-    # empty, not descending (F.sequence(1, 0) defaults to step -1 and the
-    # slice then throws INVALID_PARAMETER_VALUE.START on real short docs).
-    n_grams = F.least(
-        F.size("w") - (_NGRAM - 1), F.lit(_MAX_GRAMS_PER_DOC)
-    )
+    # docs shorter than _NGRAM words produce no grams (T.ngrams' guard)
     grams = docs.select(
         "doc_id",
         "source",
-        F.explode(
-            F.when(
-                F.size("w") >= _NGRAM,
-                F.transform(
-                    F.sequence(F.lit(1), n_grams),
-                    lambda i: F.concat_ws(" ", F.slice("w", i, _NGRAM)),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("g"),
+        F.explode(T.ngrams("w", _NGRAM, _MAX_GRAMS_PER_DOC)).alias("g"),
     )
     eval_grams = (
         grams.filter(F.col("doc_id") % _EVAL_MOD == 0).select("g").distinct()

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import numeric as N
+from ..functions import text as T
 from ..registry import query
 from ..sources import load_table
 
@@ -33,8 +34,8 @@ _SHINGLES_SQL = """
 
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixture documents table is one small parquet file -> one input
-    # split -> the CPU-heavy shingle/hash derivation would run on a single
-    # core; spread it (at 100 TB the scan has natural splits and this
+    # split -> the shingle/hash derivation would run on a single core;
+    # spread it (at 100 TB the scan has natural splits and this
     # round-robin repartition is a no-op to remove)
     docs = load_table(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
@@ -44,28 +45,11 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _shingles_of(docs: DataFrame) -> DataFrame:
     """(doc_id, s) distinct 3-token shingles of an arbitrary documents
-    frame (the streaming ingest path signs per-micro-batch frames)."""
-    toks = F.split("text", " ")
-    # guard docs shorter than one shingle: F.sequence(1, 0) defaults its
-    # step to -1 and the descending indices hit element_at(toks, 0) →
-    # runtime error (same class as the decontam_ngram short-doc bug,
-    # ADVICE r2). DuckDB's generate_series(1, 0) is empty, so the empty
-    # array matches the oracle exactly.
-    sh = F.array_distinct(
-        F.when(
-            F.size(toks) >= 3,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 2),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at(toks, i),
-                    F.element_at(toks, i + 1),
-                    F.element_at(toks, i + 2),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+    frame (the streaming ingest path signs per-micro-batch frames). The
+    token array is split once per row; the shingle lambda reads it."""
+    return docs.select("doc_id", F.split("text", " ").alias("toks")).select(
+        "doc_id", F.explode(F.array_distinct(T.ngrams("toks", 3))).alias("s")
     )
-    return docs.select("doc_id", F.explode(sh).alias("s"))
 
 
 # portable 60-bit integer hash: md5 hex prefix → bigint (identical in any
@@ -241,16 +225,16 @@ def _cand_intersections(cand: DataFrame, sh: DataFrame) -> DataFrame:
     sorted as strings) only for the caller's left join to discard all
     non-candidates (optimization r08, guide §3.2 — prune the big side
     with the selective set before any shuffle). The LSH pair list is tiny
-    (~2k rows at sf0.1), so broadcasting it (and the ≤ |cand|·|shingles
-    per doc| expansion) keeps the corpus shingle scan shuffle-free; values
-    are identical because the equi-join on s per (id_a, id_b) counts the
-    same multiset matches the self-join grouped."""
+    (~2k rows at sf0.1) and is broadcast into the id_a probe; its
+    |cand|·|shingles per doc| expansion grows with the corpus, so the
+    (id_b, s) join shuffles and AQE broadcasts it only when it is small.
+    Values are identical because the equi-join on s per (id_a, id_b)
+    counts the same multiset matches the self-join grouped."""
     sh_a = sh.select(F.col("doc_id").alias("id_a"), "s")
     sh_b = sh.select(F.col("doc_id").alias("id_b"), "s")
     left = F.broadcast(cand.select("id_a", "id_b")).join(sh_a, "id_a")
     return (
-        F.broadcast(left)
-        .join(sh_b, ["id_b", "s"])
+        left.join(sh_b, ["id_b", "s"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_common"))
     )
@@ -844,9 +828,10 @@ def dedup_block_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (headers, nav bars, license banners). One explode + one groupBy —
     shuffle ∝ total blocks (corpus/W), never quadratic; short final docs
     produce a ragged last block, matching the oracle's slice semantics."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    nblocks = F.ceil(F.size(toks) / float(_BLOCK_W)).cast("int")
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("toks")
+    )
+    nblocks = F.ceil(F.size("toks") / float(_BLOCK_W)).cast("int")
     blocks = docs.select(
         "doc_id",
         F.explode(
@@ -859,7 +844,7 @@ def dedup_block_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).otherwise(F.array().cast("array<int>")),
                 lambda b: F.md5(
                     F.concat_ws(
-                        " ", F.slice(toks, (b - 1) * _BLOCK_W + 1, _BLOCK_W)
+                        " ", F.slice("toks", (b - 1) * _BLOCK_W + 1, _BLOCK_W)
                     )
                 ),
             )
@@ -2308,25 +2293,15 @@ def dedup_substring_kgram(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass; this is north-star extension surface).
     """
     k = _SUBSTR_K
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("doc_id", F.split("text", " ").alias("toks"))
     )
-    toks = F.split("text", " ")
-    # starts 1..n-k+1; same short-doc guard as _shingles (F.sequence with
-    # start > stop would step -1 and index out of range)
-    grams = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     kg = docs.select(
         "doc_id",
-        F.size(toks).cast("bigint").alias("n_tok"),
-        F.posexplode(grams).alias("p0", "gram"),
+        F.size("toks").cast("bigint").alias("n_tok"),
+        F.posexplode(T.ngrams("toks", k)).alias("p0", "gram"),
     ).select(
         "doc_id", "n_tok", (F.col("p0") + 1).cast("bigint").alias("p"), "gram"
     )

@@ -92,11 +92,6 @@ def _pos_spark(key: F.Column, i: int) -> F.Column:
     return h % _BLOOM_BITS
 
 
-def _pos_sql(key: str, i: int) -> str:
-    h = f"CAST(concat('0x', substring(md5(concat('b{i}_', CAST({key} AS STRING))), 1, 15)) AS BIGINT)"
-    return f"({h} % {_BLOOM_BITS})"
-
-
 @query(
     "bloom_prune_join",
     oracle=f"""

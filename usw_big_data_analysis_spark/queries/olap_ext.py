@@ -1876,10 +1876,6 @@ def _pgram_case(vals, P: int, var: str) -> str:
     ).replace("'", "")
 
 
-def _pgram_round(engine_round, expr: str) -> str:
-    return engine_round(expr)
-
-
 def _pgram_oracle() -> str:
     rows = []
     for P in _PGRAM_PERIODS:
@@ -2503,7 +2499,6 @@ def rollup_distinct_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tables broadcast? The estimator is deterministic (row count x fixed
 # per-type widths — the same class of estimate Catalyst's statistics use),
 # so the plan is oracle-checkable; the 10 MB default threshold is the knob.
-_JSP_WIDTHS = {"bigint": 8, "int": 4, "double": 8, "string": 24, "timestamp": 8}
 _JSP_THRESHOLD = 10 * 1024 * 1024
 _JSP_TABLES = (
     ("region", 8 + 24),

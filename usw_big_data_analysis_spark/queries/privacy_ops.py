@@ -44,7 +44,6 @@ _QI_SQL = (
     "c_mktsegment",
     "CAST(floor(c_acctbal / 1000.0) AS INT)",
 )
-_QI_NAMES = ("nation", "segment", "bal_band")
 
 
 def _qi_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

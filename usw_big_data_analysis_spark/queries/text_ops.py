@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import numeric as N
+from ..functions import text as T
 from ..registry import query
 from ..sources import load_table
 
@@ -715,21 +716,14 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     §2.3: shuffle fewer bytes; 4.4s → ~1.9s at sf0.1). Docs shorter than
     {N} words contribute no grams and drop out (same in the oracle via
     greatest(len-{N_1}, 0))."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    gram_arr = F.array_distinct(
-        F.when(
-            F.size(toks) >= _NOV_N,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (_NOV_N - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, _NOV_N)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("toks")
     )
-    # materialize (doc_id, gram array) once: the gram construction
-    # (transform+slice+concat_ws per position) is the dominant CPU and
-    # feeds two differently-keyed branches, which Spark would otherwise
-    # recompute per branch (exchange reuse only shares shuffle outputs)
+    gram_arr = F.array_distinct(T.ngrams("toks", _NOV_N))
+    # materialize (doc_id, gram array) once: it feeds two differently-keyed
+    # branches, which Spark would otherwise recompute per branch (exchange
+    # reuse only shares shuffle outputs); measured build+collect at sf0.1
+    # on 3 cores: 1.6 s with the checkpoint, 7.6 s without
     base = docs.select("doc_id", gram_arr.alias("arr")).localCheckpoint()
     grams = base.select("doc_id", F.explode("arr").alias("g"))
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
@@ -2573,18 +2567,16 @@ def metric_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("doc_id").alias("ref_id")),
         "cand_id",
     )
+    toks = F.split("text", " ").alias("toks")
     cand = pairs.join(
         docs.select(F.col("doc_id").alias("cand_id"), "text"), "cand_id"
-    ).select(F.col("cand_id").alias("pair_id"), "text")
+    ).select(F.col("cand_id").alias("pair_id"), toks)
     ref = pairs.join(
         docs.select(F.col("doc_id").alias("ref_id"), "text"), "ref_id"
-    ).select(F.col("cand_id").alias("pair_id"), "text")
+    ).select(F.col("cand_id").alias("pair_id"), toks)
     lens = (
-        cand.select("pair_id", F.size(F.split("text", " ")).alias("cl"))
-        .join(
-            ref.select("pair_id", F.size(F.split("text", " ")).alias("rl")),
-            "pair_id",
-        )
+        cand.select("pair_id", F.size("toks").alias("cl"))
+        .join(ref.select("pair_id", F.size("toks").alias("rl")), "pair_id")
         .agg(
             F.sum("cl").cast("bigint").alias("c_len"),
             F.sum("rl").cast("bigint").alias("r_len"),
@@ -2592,17 +2584,9 @@ def metric_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def ngrams(df, n):
+    def ngram_counts(df, n):
         return (
-            df.select(
-                "pair_id",
-                F.explode(
-                    F.expr(
-                        f"transform(sequence(1, size(split(text, ' ')) - {n - 1}),"
-                        f" i -> array_join(slice(split(text, ' '), i, {n}), ' '))"
-                    )
-                ).alias("ng"),
-            )
+            df.select("pair_id", F.explode(T.ngrams("toks", n)).alias("ng"))
             .groupBy("pair_id", "ng")
             .agg(F.count("*").cast("bigint").alias("cnt"))
         )
@@ -2610,8 +2594,8 @@ def metric_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = lens
     pns = []
     for n in range(1, _BLEU_N + 1):
-        cn = ngrams(cand.filter("size(split(text, ' ')) >= %d" % n), n)
-        rn = ngrams(ref.filter("size(split(text, ' ')) >= %d" % n), n)
+        cn = ngram_counts(cand, n)
+        rn = ngram_counts(ref, n)
         clipped = (
             cn.join(
                 rn.select(

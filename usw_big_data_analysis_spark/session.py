@@ -24,6 +24,23 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else about half of the host's
+    available memory (at least 1 GiB): the heap must fit beside the Python
+    workers and whatever else shares the machine. 4g where
+    ``/proc/meminfo`` is missing."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    return f"{max(1024, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "usw_big_data_analysis_spark",
     master: str | None = None,
@@ -51,7 +68,7 @@ def get_spark(
         # thrashes when many distinct queries run in one session, paying
         # multi-second recompiles per execution
         .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

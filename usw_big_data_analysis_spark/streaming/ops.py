@@ -93,22 +93,6 @@ def tumbling_counts(events: DataFrame, width: str = "10 minutes") -> DataFrame:
     )
 
 
-def sliding_counts(
-    events: DataFrame, width: str = "10 minutes", slide: str = "5 minutes"
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", width, slide).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def session_aggregates(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Built-in session windows (gap-merged state) — twin of
     `stream_session`'s lag/cumsum batch formulation."""
